@@ -4,13 +4,11 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.model._
 import graft.operators.{DataTests, Expectations, Quarantine, ScdMerge, SchemaTransform, SnapshotCdc}
 import graft.plan.Planner
-import graft.tools.GateLifecycle.TrackedStart
 
 /** Plugin traits — the Scala equivalent of the reference's python-function
   * load/transform plugins (generators/load/python.py,
@@ -823,14 +821,11 @@ final class PipelineRunner(
           // query (AvailableNow — only new files route per run), while the
           // clean view stays a pure streaming filter for downstream writes
           val tag = a.quarantineSourceTable.getOrElse(a.source)
-          src.writeStream
-            .foreachBatch { (batch: DataFrame, id: Long) =>
+          StreamTuning.drain(src, checkpointFor(a.name + "__quarantine"))(
+            _.foreachBatch { (batch: DataFrame, id: Long) =>
               Quarantine.routeViolations(store, dlq, batch, a.rules, tag): Unit
               hooks.onBatchCommitted(currentPipeline, currentFlowgroup, dlq, id)
-            }
-            .option("checkpointLocation", checkpointFor(a.name + "__quarantine"))
-            .trigger(Trigger.AvailableNow())
-            .startTracked()
+            })
           register(a.target, withOpMeta(a0, Expectations.dropQuarantined(src, a.rules)), streaming = true)
         case Some(dlq) =>
           // batch quarantine: clean rows pass through; violating rows are
@@ -935,8 +930,8 @@ final class PipelineRunner(
         enforceDeclaredSchema(Expectations(d2, a.expectations, s"expectations_${a.name}"),
           a.tableSchemaDdl, a.name, a.tagsFile)
       }
-      val recomputeStream = if (keys.isEmpty)
-        startGlobalWindowRecompute(a, delta, deltaView, sqlText, probe, wrapMv)
+      if (keys.isEmpty)
+        runGlobalWindowRecompute(a, delta, deltaView, sqlText, probe, wrapMv)
       else {
         val missingDelta = keys.filterNot(k => delta.columns.exists(_.equalsIgnoreCase(k)))
         if (missingDelta.nonEmpty) throw Planner.PlanError(graft.ErrorCodes.ACT_011(
@@ -956,8 +951,8 @@ final class PipelineRunner(
               "row wrappers — the keys are the replace granularity and " +
               "must reach the table"))
         }
-        delta.select(keys.map(col): _*).writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+        StreamTuning.drain(delta.select(keys.map(col): _*), checkpointFor(a.name))(
+        _.foreachBatch { (batch: DataFrame, id: Long) =>
           // ONE distinct job: the collected rows serve the cardinality
           // guard, the broadcast probe (as a local relation — the big
           // recompute job does not re-derive the distinct), and
@@ -999,21 +994,8 @@ final class PipelineRunner(
           // its (no-op) commit and the checkpoint will record the batch
           // next — same at-least-once seam as every other fire site
           hooks.onBatchCommitted(currentPipeline, currentFlowgroup, a.table, id)
-        }
-        .option("checkpointLocation", checkpointFor(a.name))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      }
-      // refusals raised inside foreachBatch (the cardinality guard) must
-      // surface as the same PlanError every other ACT refusal in this
-      // branch throws, not buried in Spark's StreamingQueryException wrap
-      graft.tools.GateLifecycle.awaitStream(recomputeStream, q =>
-        try q.awaitTermination()
-        catch { case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-          Iterator.iterate(e.getCause)(_.getCause).takeWhile(_ != null)
-            .collectFirst { case pe: Planner.PlanError => pe }
-            .map(throw _).getOrElse(throw e)
         })
+      }
       store.setProperties(a.table, a.tableProperties)
       applyGovernanceMetadata(a.table, a.comment, a.tags, a.tagsFile)
       registerTableView(a.table)
@@ -1042,14 +1024,11 @@ final class PipelineRunner(
         s"materialized_view '${a.name}' (mode: incremental_join): joined_sql's " +
           "stream(...) reference did not resolve to a streamable source")
       val mvFlowKey = s"$currentPipeline/$currentFlowgroup/${a.name}"
-      joined.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+      StreamTuning.drain(joined, checkpointFor(a.name))(
+        _.foreachBatch { (batch: DataFrame, id: Long) =>
           store.appendBatch(companion, batch, mvFlowKey, id)
           hooks.onBatchCommitted(currentPipeline, currentFlowgroup, companion, id)
-        }
-        .option("checkpointLocation", checkpointFor(a.name))
-        .trigger(Trigger.AvailableNow())
-        .startTracked()
+        })
       store.readIfExists(companion).foreach { j =>
         // registered by basename (the temp-view catalog rejects dots) —
         // the same convention every written table follows below
@@ -1140,8 +1119,8 @@ final class PipelineRunner(
             val dedupCols =
               if (keys.nonEmpty) keys
               else child.columns.toSeq
-            df.writeStream
-              .foreachBatch { (batch: DataFrame, id: Long) =>
+            StreamTuning.drain(df, checkpointFor(a.name))(
+              _.foreachBatch { (batch: DataFrame, id: Long) =>
                 val missing = dedupCols.filterNot(batch.columns.contains)
                 if (missing.nonEmpty) throw Planner.PlanError(
                   s"materialized_view '${a.name}': dedup columns " +
@@ -1159,10 +1138,7 @@ final class PipelineRunner(
                   clustered(fresh, a.clusterColumns, a.clusterStrategy),
                   mvFlowKey, id)
                 hooks.onBatchCommitted(currentPipeline, currentFlowgroup, a.table, id)
-              }
-              .option("checkpointLocation", checkpointFor(a.name))
-              .trigger(Trigger.AvailableNow())
-              .startTracked()
+              })
           case None =>
             // stream-stream-bearing SQL auto-routes to append-mode
             // maintenance when every stream side is watermarked (the r12
@@ -1178,25 +1154,19 @@ final class PipelineRunner(
               appendRoute = ssjAppend)
             if (ssjAppend) logSsjStateHorizon(a.name, df)
             if (a.watermarkColumn.isDefined || ssjAppend)
-              df.writeStream.outputMode("append")
+              StreamTuning.drain(df, checkpointFor(a.name))(_.outputMode("append")
                 .foreachBatch { (batch: DataFrame, id: Long) =>
                   store.appendBatch(a.table,
                     clustered(batch, a.clusterColumns, a.clusterStrategy),
                     mvFlowKey, id)
                   hooks.onBatchCommitted(currentPipeline, currentFlowgroup, a.table, id)
-                }
-                .option("checkpointLocation", checkpointFor(a.name))
-                .trigger(Trigger.AvailableNow())
-                .startTracked()
+                })
             else
-              df.writeStream.outputMode("complete")
+              StreamTuning.drain(df, checkpointFor(a.name))(_.outputMode("complete")
                 .foreachBatch { (batch: DataFrame, id: Long) =>
                   store.replace(a.table, clustered(batch, a.clusterColumns, a.clusterStrategy), a.partitionColumns)
                   hooks.onBatchCommitted(currentPipeline, currentFlowgroup, a.table, id)
-                }
-                .option("checkpointLocation", checkpointFor(a.name))
-                .trigger(Trigger.AvailableNow())
-                .startTracked()
+                })
         }
       } else {
         store.overwrite(a.table, clustered(df, a.clusterColumns, a.clusterStrategy), a.partitionColumns)
@@ -1212,10 +1182,8 @@ final class PipelineRunner(
         case "files" =>
           val p = a.options.getOrElse("path", s"$defaultSinkRoot/${a.sinkId}")
           if (src.isStreaming)
-            src.writeStream.format(a.options.getOrElse("format", "parquet"))
-              .option("checkpointLocation", checkpointFor(a.sinkId))
-              .option("path", p).trigger(Trigger.AvailableNow())
-              .startTracked()
+            StreamTuning.drain(src, checkpointFor(a.sinkId))(
+              _.format(a.options.getOrElse("format", "parquet")).option("path", p))
           else src.write.mode("append")
             .format(a.options.getOrElse("format", "parquet")).save(p)
         case "kafka" =>
@@ -1223,9 +1191,8 @@ final class PipelineRunner(
             a.name, a.options, src.columns.toSeq)
           val conformed = graft.sources.KafkaSupport.conformColumns(src)
           if (src.isStreaming)
-            conformed.writeStream.format("kafka").options(opts)
-              .option("checkpointLocation", checkpointFor(a.sinkId))
-              .trigger(Trigger.AvailableNow()).startTracked()
+            StreamTuning.drain(conformed, checkpointFor(a.sinkId))(
+              _.format("kafka").options(opts))
           else conformed.write.format("kafka").options(opts).save()
         case "delta" =>
           // reference delta_sink.py: `format: delta` + options.tableName
@@ -1255,10 +1222,8 @@ final class PipelineRunner(
                     "batch-appended files — a streaming sink's metadata log " +
                     "would hide them from every read. Use a fresh table or " +
                     "keep this sink batch.")
-                src.writeStream.format("parquet")
-                  .option("checkpointLocation", checkpointFor(a.sinkId))
-                  .option("path", store.path(t))
-                  .trigger(Trigger.AvailableNow()).startTracked()
+                StreamTuning.drain(src, checkpointFor(a.sinkId))(
+                  _.format("parquet").option("path", store.path(t)))
               } else {
                 if (sinkLog.exists()) throw Planner.PlanError(
                   s"delta sink '${a.name}': table '$t' is owned by a " +
@@ -1273,19 +1238,16 @@ final class PipelineRunner(
               val p = a.options.getOrElse("path", throw Planner.PlanError(
                 s"delta sink '${a.name}' needs options.tableName or options.path"))
               if (src.isStreaming)
-                src.writeStream.format("parquet")
-                  .option("checkpointLocation", checkpointFor(a.sinkId))
-                  .option("path", p).trigger(Trigger.AvailableNow())
-                  .startTracked()
+                StreamTuning.drain(src, checkpointFor(a.sinkId))(
+                  _.format("parquet").option("path", p))
               else src.write.mode("append").parquet(p)
           }
         case "foreachbatch" =>
           val handler = plugin[BatchHandler](a.handlerClass.getOrElse(
             throw Planner.PlanError(s"foreachbatch sink '${a.name}' missing handler")))
           if (src.isStreaming)
-            src.writeStream.foreachBatch((df: DataFrame, id: Long) => handler(df, id))
-              .option("checkpointLocation", checkpointFor(a.sinkId))
-              .trigger(Trigger.AvailableNow()).startTracked()
+            StreamTuning.drain(src, checkpointFor(a.sinkId))(
+              _.foreachBatch((df: DataFrame, id: Long) => handler(df, id)))
           else handler(src, 0L)
         case "custom" =>
           // DataSource V2 custom sink: a classpath TableProvider with
@@ -1294,9 +1256,8 @@ final class PipelineRunner(
           val provider = a.handlerClass.getOrElse(throw Planner.PlanError(
             s"custom sink '${a.name}' missing custom_sink_class"))
           if (src.isStreaming)
-            src.writeStream.format(provider).options(a.options)
-              .option("checkpointLocation", checkpointFor(a.sinkId))
-              .trigger(Trigger.AvailableNow()).startTracked()
+            StreamTuning.drain(src, checkpointFor(a.sinkId))(
+              _.format(provider).options(a.options))
           else src.write.format(provider).options(a.options).mode("append").save()
         case other => throw Planner.PlanError(s"unknown sink type '$other'")
       }
@@ -1824,9 +1785,9 @@ final class PipelineRunner(
     * Reference: `generators/write/materialized_view.py:21` (DLT Enzyme's
     * incremental-MV surface — this closes its global-OVER-window
     * residue). */
-  private def startGlobalWindowRecompute(a: MaterializedViewWrite,
+  private def runGlobalWindowRecompute(a: MaterializedViewWrite,
       delta: DataFrame, deltaView: String, sqlText: String, probe: DataFrame,
-      wrapMv: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
+      wrapMv: DataFrame => DataFrame): Unit = {
     import org.apache.spark.sql.graftnative.GlobalWindowMv
     val shape0 = GlobalWindowMv.analyze(probe.queryExecution.analyzed) match {
       case Right(sh) => sh
@@ -1855,8 +1816,8 @@ final class PipelineRunner(
           "declared schema/row wrappers removed __gw_bucket — it is the " +
           "physical replace granularity and must reach the table " +
           "(declare it as __gw_bucket INT, or drop the declared schema)"))
-    delta.select(refCols.map(col): _*).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamTuning.drain(delta.select(refCols.map(col): _*), checkpointFor(a.name))(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
         // re-resolve per batch (the keyed path's convention): the base
         // view's files may differ between microbatches of one run
         val plan = spark.sql(sqlText).queryExecution.analyzed
@@ -2037,10 +1998,7 @@ final class PipelineRunner(
               graft.Log.warn(s"materialized_view '${a.name}': $msg"))
         }
         hooks.onBatchCommitted(currentPipeline, currentFlowgroup, a.table, batchId)
-      }
-      .option("checkpointLocation", checkpointFor(a.name))
-      .trigger(Trigger.AvailableNow())
-      .start()
+      })
   }
 
   /** One advisory line per stream-stream join naming the computed state
@@ -2435,17 +2393,14 @@ final class PipelineRunner(
         // the (flow, batch) txn identity.
         val opts = scdOpts.get
         val flowKey = s"$currentPipeline/$currentFlowgroup/${a.name}"
-        src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
+        StreamTuning.drain(src, checkpointFor(a.name))(
+          _.foreachBatch { (batch: DataFrame, id: Long) =>
             withBatchMaterialized(batch, reused = true) { b =>
               val ch = logChanges(a, b, Some(opts), Some((flowKey, id)))
               mergeInto(a, b, opts, ch)
             }
             hooks.onBatchCommitted(currentPipeline, currentFlowgroup, a.table, id)
-          }
-          .option("checkpointLocation", checkpointFor(a.name))
-          .trigger(Trigger.AvailableNow())
-          .startTracked()
+          })
       case (Some(_), false) =>
         withBatchMaterialized(src, reused = true) { b =>
           val ch = logChanges(a, b, scdOpts)
@@ -2493,8 +2448,8 @@ final class PipelineRunner(
         // the change log dedups on the same identity — the plain-append
         // counterpart of the CDC path's idempotent merge
         val flowKey = s"$currentPipeline/$currentFlowgroup/${a.name}"
-        src.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
+        StreamTuning.drain(src, checkpointFor(a.name))(
+          _.foreachBatch { (batch: DataFrame, id: Long) =>
             // reused only when a change log rides beside the table append
             withBatchMaterialized(batch, reused = a.changeLog) { b =>
               logChanges(a, b, None, Some((flowKey, id))): Unit
@@ -2503,10 +2458,7 @@ final class PipelineRunner(
                 flowKey, id, a.partitionColumns)
             }
             hooks.onBatchCommitted(currentPipeline, currentFlowgroup, a.table, id)
-          }
-          .option("checkpointLocation", checkpointFor(a.name))
-          .trigger(Trigger.AvailableNow())
-          .startTracked()
+          })
       case (None, _) =>
         withBatchMaterialized(src, reused = a.changeLog) { b =>
           logChanges(a, b, None): Unit

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import graft.tools.GateLifecycle.TrackedStart
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+
+import graft.exec.StreamTuning
 
 /** Monitoring: union N pipeline event logs into one table — the runtime of
   * the reference's generated monitoring notebook
@@ -73,15 +72,12 @@ object Monitoring {
           pool.submit(new java.util.concurrent.Callable[Unit] {
             def call(): Unit = {
               val schema = spark.read.parquet(path).schema
-              spark.readStream.schema(schema).parquet(path)
-                .writeStream
-                .foreachBatch { (b: DataFrame, id: Long) =>
+              StreamTuning.drain(spark.readStream.schema(schema).parquet(path),
+                  s"$checkpointRoot/monitor_$escaped")(
+                _.foreachBatch { (b: DataFrame, id: Long) =>
                   b.write.mode("overwrite")
                     .parquet(s"$targetPath/_pipeline=$escaped/_batch=$id")
-                }
-                .option("checkpointLocation", s"$checkpointRoot/monitor_$escaped")
-                .trigger(Trigger.AvailableNow())
-                .startTracked()
+                })
             }
           })
         }

@@ -6,8 +6,9 @@ package graft.tools
   * trigger-polling/teardown (every `runner.run` with a stream inside:
   * q58–q65, c14/c15-class), gate preamble setup — not on query plans.
   * All of it records here: the child-JVM spawn explicitly (Extras c15),
-  * every run-to-completion stream via [[awaitStream]]/`startTracked`
-  * (wall minus Spark's own triggerExecution work), and the gate preamble
+  * every run-to-completion stream via [[awaitStream]] (wall minus Spark's
+  * own triggerExecution work; `graft.exec.StreamTuning.drain` calls it
+  * for every engine stream), and the gate preamble
   * via [[timed]]. [[graft.Bench]] drains the accumulator around every
   * timed execution and reports `plan_cost` (total minus scaffolding)
   * beside `total` in the contract line — so a lifecycle-heavy gate cannot
@@ -58,19 +59,5 @@ object GateLifecycle {
       }.sum
       add(math.max(0.0, wall - work))
     }
-  }
-
-  /** `.startTracked()` — drop-in replacement for the
-    * `.start().awaitTermination()` tail of a write-stream chain, routing
-    * through [[awaitStream]] so every run-to-completion stream the engine
-    * executes attributes its lifecycle. The start itself goes through
-    * [[graft.exec.StreamTuning.startAdaptive]] so every runner stream gets
-    * the input-size-derived state partitioning (a no-op for non-file
-    * sources and at/above the session's configured parallelism). */
-  implicit final class TrackedStart[T](
-      private val w: org.apache.spark.sql.streaming.DataStreamWriter[T])
-      extends AnyVal {
-    def startTracked(): Unit =
-      awaitStream(graft.exec.StreamTuning.startAdaptive(w))
   }
 }

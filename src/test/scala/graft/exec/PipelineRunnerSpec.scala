@@ -1074,6 +1074,39 @@ class PipelineRunnerSpec extends SparkSuite {
       "first-seen rows keep run 1's ingestion time; the new row carries run 2's")
   }
 
+  test("dedup MV: a declared schema dropping a DISTINCT column surfaces as a PlanError") {
+    // the guard runs inside foreachBatch; the stream-start seam unwraps it
+    // from Spark's StreamingQueryException like every other refusal
+    val (runner, _, dir) = freshRunner()
+    val landing = s"$dir/dmvs_landing"
+    Seq(("a", 1L)).toDF("k", "v").write.json(landing)
+    val yaml =
+      s"""pipeline: p
+         |flowgroup: dmvs
+         |actions:
+         |  - name: l
+         |    type: load
+         |    source:
+         |      type: cloudfiles
+         |      path: $landing
+         |      format: json
+         |      readMode: stream
+         |      table_schema: "k STRING, v BIGINT"
+         |    target: v_ev
+         |  - name: mv
+         |    type: write
+         |    sql: "SELECT DISTINCT k, v FROM v_ev"
+         |    write_target:
+         |      type: materialized_view
+         |      table: dmvs
+         |      mode: incremental
+         |      table_schema: "k STRING"
+         |""".stripMargin
+    val e = intercept[graft.plan.Planner.PlanError](
+      runner.run(YamlConfig.parseFlowGroup(yaml)))
+    assert(e.getMessage.contains("dedup columns v"), e.getMessage)
+  }
+
   test("streaming_table dedup: bounded-state ingest dedup, in-batch and cross-run") {
     val (runner, store, dir) = freshRunner()
     val landing = s"$dir/sdd_landing"
