@@ -624,7 +624,7 @@ final class PipelineRunner(
         // corrections, GDPR deletes). The table directory itself cannot be
         // skip-filtered — a rewrite swaps in files indistinguishable from
         // appends — so the stream rides the append-only `__changes`
-        // companion, filtered on the per-version `._commit_kinds` sidecar
+        // companion, filtered on the per-version kinds of its commit record
         // and projected back to table rows. Rewrite versions fold into a
         // literal NOT-IN (rewrites are rare by the option's own use case;
         // the common append version needs no predicate at all).
@@ -637,29 +637,18 @@ final class PipelineRunner(
           s"load '${a.name}': $optName needs the engine-managed " +
             s"change log — write '${a.table}' with change_log: true " +
             "(an external table's rewrite commits are indistinguishable)")
-        assertLogIntegrity(chTable, s"load '${a.name}'")
-        val kinds = store.commitKinds(chTable)
-        val latest = store.currentCommitVersion(chTable).getOrElse(-1L)
-        // partial coverage = silently wrong skipping (an unrecorded rewrite
-        // commit would stream through) — same loudness as commitTsOf
-        if (kinds.isEmpty || kinds.head._1 != 0 ||
-            kinds.size.toLong != kinds.last._1 + 1 || kinds.last._1 != latest)
-          throw Planner.PlanError(
-            s"load '${a.name}': '$chTable' has PARTIAL commit-kind coverage " +
-              s"(recorded ${kinds.size} of 0..$latest) — the log predates " +
-              "kind recording, so append and rewrite commits cannot be told " +
-              "apart; full-refresh the producing write to rebuild the log")
+        val commits = verifiedCommits(chTable, s"load '${a.name}'")
         if (!a.skipChangeCommits) {
-          val rewrites = kinds.filter(k => k._2 != "append" && k._2 != "delete")
+          val rewrites = commits.filter(c => c.kind != "append" && c.kind != "delete")
           if (rewrites.nonEmpty) throw Planner.PlanError(
             s"load '${a.name}': table '${a.table}' has update/rewrite " +
-              s"commits (versions ${rewrites.map(_._1).mkString(", ")}) — " +
+              s"commits (versions ${rewrites.map(_.version).mkString(", ")}) — " +
               "ignoreDeletes only excuses delete-only commits; use " +
               "skipChangeCommits to drop rewrite commits as well")
         }
-        val dropped = kinds.filter(k =>
-          if (a.skipChangeCommits) k._2 != "append" else k._2 == "delete")
-          .map(_._1)
+        val dropped = commits.filter(c =>
+          if (a.skipChangeCommits) c.kind != "append" else c.kind == "delete")
+          .map(_.version)
         val schema = store.read(chTable).schema
         val stream = rateLimited(spark.readStream.schema(schema), a)
           .parquet(store.path(chTable))
@@ -683,14 +672,16 @@ final class PipelineRunner(
       // batch/stream consumption — shares the half-commit integrity contract
       // of version_as_of (checked at plan time; the write path re-checks
       // per commit, so a mid-run crash cannot corrupt silently either)
-      if (a.table.endsWith("__changes") && store.exists(a.table))
-        assertLogIntegrity(a.table, s"load '${a.name}'")
+      // (a table that merely has a `__changes`-suffixed NAME, without the
+      // `_commit_version` column, is not a change log and is served as is)
+      if (a.table.endsWith("__changes") &&
+          store.readIfExists(a.table).exists(_.columns.contains("_commit_version")))
+        verifiedCommits(a.table, s"load '${a.name}'")
       // CDF bounds resolve TOGETHER at run time: timestamps map to versions
-      // via the commit-ts sidecar (startingTimestamp = earliest commit
+      // via the commit record (startingTimestamp = earliest commit
       // at-or-after, endingTimestamp = latest at-or-before — Delta
       // semantics); a resolved start above the resolved end is a loud
-      // error, not a silent empty frame. Version-only bounds never touch
-      // the sidecar (lazy), so pre-timestamp logs keep working with them.
+      // error, not a silent empty frame.
       val tsBounded = if (!a.hasCdfBounds) base0
       else {
         lazy val commits = commitTsOf(a.table, a.name)
@@ -1328,44 +1319,40 @@ final class PipelineRunner(
   /** CDF emulation (SURVEY §7.3b): append the applied batch to an
     * append-only `<table>__changes` companion with `_change_type` +
     * `_commit_version` — the parquet stand-in for Delta's readChangeFeed.
-    * A `replay` sidecar records whether (and how) point-in-time states can
-    * be reconstructed from the log — the basis of version_as_of. */
+    * Each version's line in the log's commit record ([[TableStore.commits]])
+    * carries its time, kind, txn and replay spec — whether (and how)
+    * point-in-time states can be reconstructed, the basis of
+    * version_as_of. */
   private def logChanges(a: StreamingTableWrite, batch: DataFrame,
       mergeOpts: Option[ScdMerge.Options],
       txn: Option[(String, Long)] = None): Option[ChangeCommit] =
     if (!a.changeLog) None else {
     val chTable = s"${a.table}__changes"
     // foreachBatch replay of a FULLY-committed batch (crash after commit,
-    // before the checkpoint marker): the txn sidecar says this (flow,
+    // before the checkpoint marker): the commit record says this (flow,
     // batch) already produced its commit — logging it again would double
     // the change rows at a fresh version. Partial commits never reach here
-    // via this skip: their txn line was not written, and the intent-marker
-    // probe below stays loud for them.
+    // via this skip: their commit line was not written, and the intent
+    // probe below stays loud for them. The set's first use per runner
+    // parses the record, which refuses a log whose record is missing or
+    // has a gap.
+    val committed = committedTxnsCached(chTable)
     val txnId = txn.map { case (flow, id) => s"$flow#$id" }
-    if (txnId.exists(committedTxnsCached(chTable).contains)) return None
+    if (txnId.exists(committed.contains)) return None
     // serialize the replay spec FIRST: its separator-name guard must fire
     // before any rows land in the log
     val spec = replaySpec(mergeOpts)
-    // the WHOLE version-assignment + append + counter-advance sequence
-    // runs under the log table's lock (reentrant — the inner appends
-    // re-acquire): two parallel fan-in flowgroups otherwise both peek the
-    // same next version, tag two logical commits with one number, and
-    // interleave each other's intent markers
+    // begin + append + record run under the log's lock (reentrant): two
+    // parallel fan-in flowgroups would otherwise begin the same version
     store.withTableLock(chTable) {
-    val version = store.nextCommitVersion(chTable, "_commit_version")
-    // Write-path integrity: if a previous commit crashed between append and
-    // counter advance, nextCommitVersion (a pure peek) returns the SAME
-    // version — re-appending would land the interrupted batch's rows twice
-    // at one version, which then passes every read-side check. A full-log
-    // probe per microbatch would be O(log size) on the hot append path, so
-    // the trigger is an O(1) intent marker instead: set before the append,
-    // cleared after the commit completes — it survives IFF a commit was
-    // interrupted, and only then does the (expensive, pushdown-pruned)
-    // orphan probe run. A crash BEFORE the append leaves the marker but no
-    // rows; the probe finds the log clean and the write proceeds.
-    if (store.getMeta(chTable, "commit_intent").isDefined)
-      assertLogIntegrity(chTable, s"write '${a.name}'", force = true)
-    store.setMeta(chTable, "commit_intent", version.toString)
+    // Write-path integrity: after a crash between rows and commit line the
+    // record ends in an intent and beginCommit hands out the SAME version;
+    // re-appending would land the batch's rows twice at one version, which
+    // passes every read-side check. Only a trailing intent arms the
+    // (pushdown-pruned) orphan probe, so healthy commits never pay it; a
+    // crash BEFORE the rows leaves no rows, and the probe lets it proceed.
+    val (version, interrupted) = store.beginCommit(chTable)
+    if (interrupted) verifiedCommits(chTable, s"write '${a.name}'", force = true): Unit
     val (nDel, nTrunc) =
       try commitChangeRows(a, chTable, version, batch, mergeOpts, spec, txnId)
       catch { case e: Throwable => uncacheIntegrity(chTable); throw e }
@@ -1380,9 +1367,9 @@ final class PipelineRunner(
   private final case class ChangeCommit(table: String, version: Long,
       nDeletes: Option[Long], nTruncates: Option[Long])
 
-  /** The append + sidecar sequence of one change-log commit; any throw
-    * inside leaves the intent marker set (cleared last) and the caller
-    * drops the integrity-probe cache for the log. */
+  /** The rows + commit line of one change-log commit; any throw inside
+    * leaves the record ending in the intent line, and the caller drops the
+    * integrity-probe cache for the log. */
   private def commitChangeRows(a: StreamingTableWrite, chTable: String,
       version: Long, batch: DataFrame,
       mergeOpts: Option[ScdMerge.Options], spec: String,
@@ -1418,17 +1405,10 @@ final class PipelineRunner(
       .withColumn("_commit_version", lit(version))
     store.append(chTable, delProbe.fold(logged)(o =>
       logged.observe(o, obsMetrics.head, obsMetrics.tail: _*)))
-    // sidecars advance only AFTER the rows are durably appended — the old
-    // counter-first ordering let a crashed append leave a phantom empty
-    // latest version, and version_as_of at it silently returned the
-    // PREVIOUS state. The remaining (inverse) crash window — rows at v but
-    // counter still v-1 — is caught loudly by timeTravel's counter-vs-log
-    // cross-check instead of resolving wrong.
-    store.advanceCommitVersion(chTable, version)
-    // commit wall-clock → `._commit_ts` sidecar: what Delta keeps in its
-    // log, and what timestamp_as_of / startingTimestamp resolve against
-    store.recordCommitTimestamp(chTable, version)
-    // commit kind → `._commit_kinds`: a plain append flow appends blindly;
+    // rows landed, commit line not yet written: the next write must refuse
+    // ("interrupted") until a full refresh rebuilds the log
+    CrashForge.maybeHalt("changelog_rows")
+    // commit kind: a plain append flow appends blindly;
     // any merge-engine batch (CDC, snapshot-CDC) rewrites the target —
     // the per-version signal skipChangeCommits streams filter on. An SCD1
     // merge whose batch carried ONLY apply_as_deletes rows is the narrower
@@ -1438,7 +1418,7 @@ final class PipelineRunner(
     // ignoreDeletes must stay loud on. Decided from the in-memory batch —
     // not a read-back of the just-written log, which would put an
     // O(log-size) listing on every delete-predicate microbatch (the cost
-    // class the intent-marker design above exists to avoid). A row whose
+    // class the intent-line design above exists to avoid). A row whose
     // predicate is not TRUE (false or null → logged "upsert") makes the
     // commit a rewrite. The count arrives from the append's observed
     // metric (get blocks until the completed write's listener fires); an
@@ -1472,28 +1452,14 @@ final class PipelineRunner(
       batch.filter(expr(d) <=> lit(true)).count()).get)
     val nTrunc = truncExpr.map(t => observedCount("__n_trunc")(
       batch.filter(expr(t) <=> lit(true)).count()).get)
-    store.recordCommitKind(chTable, version,
-      if (mergeOpts.isEmpty) "append"
-      else if (deleteOnly) "delete"
-      else "rewrite")
-    // the sidecar is per-TABLE: if another flow (fan-in) or an earlier
-    // config already logged under DIFFERENT merge options, replaying the
-    // mixed log under either set would be silently wrong — degrade to
-    // "mixed" (sticky: "none" from a truncate config also never upgrades)
-    val prior = store.getMeta(chTable, "replay")
-    store.setMeta(chTable, "replay", if (prior.exists(_ != spec)) "mixed" else spec)
-    // txn identity lands with the other post-append sidecars: a crash
-    // before this line leaves no txn record, so a replay re-commits through
-    // the intent-marker path instead of silently skipping a lost commit
-    txnId.foreach { t =>
-      store.recordCommitTxn(chTable, version, t)
-      committedTxnsCached(chTable) += t
-    }
-    // commit complete — clear the intent marker LAST (a crash among the
-    // sidecar writes above leaves the marker; the next write's probe then
-    // finds the log clean, and partial ts/kind sidecar coverage is caught
-    // loudly by their own readers)
-    store.deleteMeta(chTable, "commit_intent")
+    val kind = if (mergeOpts.isEmpty) "append" else if (deleteOnly) "delete" else "rewrite"
+    // the commit point, AFTER the rows landed (a commit line first would
+    // let a crashed append leave a phantom empty latest version). The time
+    // is what timestamp bounds resolve against; the txn is what a replay
+    // of this batch is skipped on.
+    store.recordCommit(chTable, TableStore.Commit(version,
+      System.currentTimeMillis(), kind, spec, txnId))
+    txnId.foreach(committedTxnsCached(chTable) += _)
     (nDel, nTrunc)
   }
 
@@ -1519,17 +1485,17 @@ final class PipelineRunner(
   private def replaySpec(mergeOpts: Option[ScdMerge.Options]): String = mergeOpts match {
     case None => "append"
     case Some(o) if o.applyAsTruncates.isEmpty =>
-      // the sidecar's ';'/','/'=' separators are load-bearing: a column
-      // name containing one would round-trip into DIFFERENT Options (extra
+      // the spec's ';'/','/'=' separators are load-bearing: a column name
+      // containing one would round-trip into DIFFERENT Options (extra
       // phantom columns) and replay a wrong point-in-time state without
-      // ever hitting the unparseable-sidecar guard — reject loudly at
-      // write time instead
+      // ever hitting the unparseable-spec guard; a tab or line break would
+      // split the commit record's line — reject loudly at write time
       def l(s: Seq[String]) = {
-        s.find(c => c.exists(";,=".contains(_))).foreach(c =>
+        s.find(c => c.exists(";,=\t\n\r".contains(_))).foreach(c =>
           throw Planner.PlanError(
-            s"change_log: CDC column name '$c' contains a replay-sidecar " +
-              "separator (';', ',' or '=') — rename the column or disable " +
-              "change_log on this write"))
+            s"change_log: CDC column name '$c' contains a replay-spec " +
+              "separator (';', ',', '=', a tab or a line break) — rename " +
+              "the column or disable change_log on this write"))
         s.mkString(",")
       }
       val track = o.trackHistoryColumns.map(t => s";track=${l(t)}").getOrElse("")
@@ -1564,28 +1530,20 @@ final class PipelineRunner(
         "(UTC) or epoch milliseconds"))
   }
 
-  /** The change log's recorded (version, epochMillis) commits, loud when
-    * absent or PARTIAL — a sidecar that covers only post-upgrade commits
-    * would silently misresolve timestamp bounds (e.g. a startingTimestamp
-    * before every commit would skip the unrecorded early versions). */
+  /** The change log's (version, epochMillis) commits; loud when it has
+    * none (the listing itself is loud on a missing record or a gap). */
   private def commitTsOf(table: String, name: String): Seq[(Long, Long)] = {
     val chTable = if (table.endsWith("__changes")) table else s"${table}__changes"
-    val ts = store.commitTimestamps(chTable)
+    val ts = store.commits(chTable).map(c => (c.version, c.epochMillis))
     if (ts.isEmpty) throw Planner.PlanError(
-      s"load '$name': no commit timestamps recorded for '$chTable' — the " +
-        "change log predates timestamp recording or does not exist; " +
-        "version bounds (version_as_of/startingVersion) work without timestamps")
-    val latest = store.currentCommitVersion(chTable).getOrElse(ts.last._1)
-    if (ts.head._1 != 0 || ts.size.toLong != ts.last._1 + 1 || ts.last._1 != latest)
-      throw Planner.PlanError(
-        s"load '$name': '$chTable' has PARTIAL commit-timestamp coverage " +
-          s"(recorded versions ${ts.head._1}..${ts.last._1} of 0..$latest) — " +
-          "timestamp bounds would silently misresolve; use version bounds")
+      s"load '$name': no commits recorded for '$chTable' — timestamp bounds " +
+        "need the engine-managed change log (change_log: true)")
     ts
   }
 
-  /** Counter-vs-log integrity: rows beyond the recorded counter mean a
-    * change-log commit crashed between its append and its counter advance —
+  /** The log's committed versions ([[TableStore.commits]]), after the
+    * record-vs-log integrity check: rows beyond the last recorded commit
+    * mean a change-log commit crashed between its rows and its commit line —
     * the half-commit cannot be distinguished from a complete one, so every
     * consumer (time travel, CDF windows, `__changes` loads, and the NEXT
     * write, which would otherwise re-append the batch at the same version
@@ -1598,13 +1556,13 @@ final class PipelineRunner(
   // replays, bounded CDF windows) would otherwise re-run it per consumer.
   // Sound within a runner's lifetime because of the single-writer
   // discipline: the only mutation path is this runner's own write path,
-  // which bumps the commit counter (new cache key → fresh probe). The two
+  // which records a new version (new cache key → fresh probe). The two
   // ways a log can rot mid-run bypass the cache explicitly: a process
   // crash kills the runner (next run probes fresh), and an in-process
   // commit failure caught by the orchestrator's fault policy calls
-  // [[uncacheIntegrity]] — plus the write path's intent-marker probe
-  // always runs `force`d, since a surviving marker IS evidence of an
-  // interrupted commit.
+  // [[uncacheIntegrity]] — plus the write path's intent probe always runs
+  // `force`d, since a trailing intent line IS evidence of an interrupted
+  // commit.
   private val integrityProbed =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
 
@@ -1614,22 +1572,21 @@ final class PipelineRunner(
   private def uncacheIntegrity(chTable: String): Unit =
     integrityProbed.removeIf(_._1 == chTable): Unit
 
-  private def assertLogIntegrity(chTable: String, who: String,
-      force: Boolean = false): Unit =
-    store.readIfExists(chTable).foreach { changes =>
-      // a table that merely has a `__changes`-suffixed NAME (no guard
-      // forbids one) is not a change log — probing it would crash on the
-      // missing column with a raw AnalysisException
-      if (!changes.columns.contains("_commit_version")) return
-      val latest = store.currentCommitVersion(chTable).getOrElse(-1L)
-      if (!force && integrityProbed.contains((chTable, latest))) return
-      val orphaned = !changes.filter(col("_commit_version") > latest).isEmpty
-      if (orphaned) throw Planner.PlanError(
-        s"$who: '$chTable' holds rows beyond the recorded counter $latest — " +
-          "a change-log commit was interrupted; full-refresh the producing " +
-          "write to rebuild the log")
-      integrityProbed.add((chTable, latest)): Unit
-    }
+  private def verifiedCommits(chTable: String, who: String,
+      force: Boolean = false): Seq[TableStore.Commit] = {
+    val commits = store.commits(chTable)
+    val latest = commits.lastOption.fold(-1L)(_.version)
+    if (force || !integrityProbed.contains((chTable, latest)))
+      store.readIfExists(chTable).foreach { changes =>
+        if (!changes.filter(col("_commit_version") > latest).isEmpty)
+          throw Planner.PlanError(
+            s"$who: '$chTable' holds rows beyond the last recorded commit " +
+              s"$latest — a change-log commit was interrupted; full-refresh " +
+              "the producing write to rebuild the log")
+        integrityProbed.add((chTable, latest)): Unit
+      }
+    commits
+  }
 
   /** maxFilesPerTrigger: Delta's stream rate limit, passed verbatim to
     * Spark's file-stream source (same option name, same semantics —
@@ -1646,17 +1603,19 @@ final class PipelineRunner(
     val changes = store.readIfExists(chTable).getOrElse(throw Planner.PlanError(
       s"load '$name': version_as_of needs the engine-managed change log — " +
         s"write '$table' with change_log: true"))
+    val commits = verifiedCommits(chTable, s"load '$name'")
     // version bounds are a loud error, not a silent clamp: v beyond the
     // latest commit would present the CURRENT table as a past snapshot
-    val latest = store.currentCommitVersion(chTable).getOrElse(-1L)
+    val latest = commits.lastOption.fold(-1L)(_.version)
     if (v < 0 || v > latest) throw Planner.PlanError(
       s"load '$name': version_as_of $v out of range — '$table' has " +
         s"commit versions 0..$latest")
-    assertLogIntegrity(chTable, s"load '$name'")
     val bounded = changes.filter(col("_commit_version") <= v)
-    store.getMeta(chTable, "replay") match {
-      case Some("append") => bounded.drop("_change_type", "_commit_version")
-      case Some(s) if s.startsWith("scd;") =>
+    // the spec is per-TABLE: a log that flows (fan-in) or configs wrote
+    // under DIFFERENT merge options replays wrong under either set
+    commits.map(_.replay).distinct match {
+      case Seq("append") => bounded.drop("_change_type", "_commit_version")
+      case Seq(s) if s.startsWith("scd;") =>
         val opts = scala.util.Try {
           val kv = s.drop(4).split(";").map { p =>
             val (k, vv) = p.span(_ != '='); k -> vv.drop(1)
@@ -1673,21 +1632,17 @@ final class PipelineRunner(
             columnList = kv.get("cols").map(_ => l("cols")),
             exceptColumnList = l("colsx") ++ Seq("_change_type", "_commit_version"))
         }.getOrElse(throw Planner.PlanError(
-          s"load '$name': '$table' has an unparseable replay sidecar '$s' — " +
-            "re-run the write to refresh it"))
+          s"load '$name': '$table' has an unparseable replay spec '$s' — " +
+            "full-refresh the producing write"))
         ScdMerge.applyChanges(None, bounded, opts)
-      case Some("mixed") => throw Planner.PlanError(
-        s"load '$name': '$table' is change-logged by flows with DIFFERENT " +
-          "merge options (fan-in or a config change) — no single option set " +
-          "replays the mixed log; version_as_of unavailable")
-      case Some(_) => throw Planner.PlanError(
+      case Seq(_) => throw Planner.PlanError(
         s"load '$name': '$table' was change-logged with apply_as_truncates — " +
           "a truncate's effect depends on batch boundaries the log does not " +
           "preserve; version_as_of unavailable")
-      case None => throw Planner.PlanError(
-        s"load '$name': '$table' has no replay sidecar (its change log was " +
-          "written before replay metadata existed) — re-run the write once " +
-          "to record it, then version_as_of works")
+      case _ => throw Planner.PlanError(
+        s"load '$name': '$table' is change-logged by flows with DIFFERENT " +
+          "merge options (fan-in or a config change) — no single option set " +
+          "replays the mixed log; version_as_of unavailable")
     }
   }
 
@@ -2302,7 +2257,7 @@ final class PipelineRunner(
     }
 
   /** Committed (flow#batch) identities per change log, parsed from the
-    * `._commit_txn` sidecar ONCE per runner and appended in memory after —
+    * commit record ONCE per runner and appended in memory after —
     * a per-microbatch file re-parse would put an O(total commits) cost on
     * the hot append path, the exact class the intent-marker design avoids.
     * Safe under the single-writer-per-table discipline the store documents
@@ -2311,7 +2266,7 @@ final class PipelineRunner(
   private val txnCache = mutable.Map[String, mutable.Set[String]]()
   private def committedTxnsCached(chTable: String): mutable.Set[String] =
     txnCache.getOrElseUpdate(chTable,
-      mutable.Set.from(store.committedTxns(chTable)))
+      mutable.Set.from(store.commits(chTable).flatMap(_.txn)))
 
   /** Materialize a write batch consumed by MULTIPLE actions — the
     * change-log append, the delete-kind probe, the tombstone candidate
@@ -2626,6 +2581,10 @@ final class PipelineRunner(
         store.replace(a.table,
           clustered(merge(t), a.clusterColumns, a.clusterStrategy), partCols)
     }
+    // live merged, tombstones not yet refreshed: the batch replays, and the
+    // replay's logChanges skips its recorded txn, so the tombstones come
+    // from the checkpoint path of tombstoneCandidates
+    CrashForge.maybeHalt("changelog_tombstones")
     tombCandidates.foreach(c => refreshTombstones(a.table, tombTable, opts, c))
   }
 

@@ -377,7 +377,7 @@ final class TableStore(spark: SparkSession, val warehouse: String,
     val f = new java.io.File(path(table))
     if (f.exists()) rm(f)
     // every sidecar is a sibling file named "<dir>._<key>" — remove them all
-    // (properties, commit version, snapshot version, once markers, ...)
+    // (properties, commit record, snapshot version, once markers, ...)
     // EXCEPT the writer lock: we are holding it, and deleting it would
     // detach any concurrently-spinning process onto a fresh inode, letting
     // two holders coexist — the lock file outlives its table by design
@@ -425,101 +425,63 @@ final class TableStore(spark: SparkSession, val warehouse: String,
   def setMeta(table: String, key: String, value: String): Unit =
     TableStore.atomicWrite(Paths.get(path(table) + s"._$key"), value)
 
-  def deleteMeta(table: String, key: String): Unit =
-    Files.deleteIfExists(Paths.get(path(table) + s"._$key")): Unit
+  /** A change log's commit record, `<log>._commits`: the one file that
+    * says which versions of `<log>` are committed (Delta keeps the same in
+    * `_delta_log`, one entry per version). Lines are tab-separated and
+    * newline-terminated, of two kinds:
+    *   - `intent <v>`: appended by [[beginCommit]] BEFORE version v's rows;
+    *   - `commit <v> <epochMs> <kind> <replay> <txn>`: appended by
+    *     [[recordCommit]] after them. This line is the commit point.
+    * Only commit lines count. A last complete line that is an intent marks
+    * an interrupted commit; a torn last line (a crash mid-append leaves no
+    * newline) is ignored, and the next [[beginCommit]] cuts it off. */
+  private def commitRecord(log: String): Path = Paths.get(path(log) + "._commits")
 
-  /** Per-commit `version=value` line sidecars share one append/parse pair —
-    * a torn-line or encoding fix must land on every commit sidecar at once,
-    * not drift between copies. O(1) append per commit, metadata-scale. */
-  private def appendCommitLine(table: String, suffix: String,
-      version: Long, value: String): Unit = {
-    val p = Paths.get(path(table) + suffix)
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, s"$version=$value\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND): Unit
+  /** Append the intent line for `log`'s next version and return
+    * (version, interrupted). The version comes from the record's last
+    * complete line alone (a tail read: the cost does not grow with the
+    * number of commits); `interrupted` = that line was an intent, so a
+    * commit of this version started, never recorded, and its rows may
+    * already be in the log. */
+  def beginCommit(log: String): (Long, Boolean) = withTableLock(log) {
+    val p = commitRecord(log)
+    val begun = TableStore.lastCompleteLine(p) match {
+      case None if exists(log) => TableStore.noRecord(log, "the record file is missing")
+      case None => (0L, false)
+      case Some(line) => TableStore.parseRecordLine(log, line) match {
+        case Left(v) => (v, true)
+        case Right(c) => (c.version + 1, false)
+      }
+    }
+    TableStore.appendLine(p, s"intent\t${begun._1}")
+    begun
   }
 
-  private def commitLines(table: String, suffix: String): Seq[(Long, String)] = {
-    val p = Paths.get(path(table) + suffix)
-    if (!Files.exists(p)) Nil
-    else Files.readString(p).linesIterator.filter(_.contains("=")).map { l =>
-      val Array(v, value) = l.split("=", 2)
-      (v.trim.toLong, value.trim)
-    }.toSeq.sortBy(_._1)
+  /** Append `c`'s commit line: the commit point of version `c.version`. */
+  def recordCommit(log: String, c: TableStore.Commit): Unit = withTableLock(log) {
+    val txn = c.txn.map(java.net.URLEncoder.encode(_, "UTF-8")).getOrElse("")
+    TableStore.appendLine(commitRecord(log),
+      Seq("commit", c.version, c.epochMillis, c.kind, c.replay, txn).mkString("\t"))
   }
 
-  /** Commit-timestamp sidecar (`._commit_ts`): the basis of TIMESTAMP time
-    * travel and timestamp CDF bounds — Delta records these in its log; the
-    * parquet emulation records them here. */
-  def recordCommitTimestamp(table: String, version: Long,
-      epochMillis: Long = System.currentTimeMillis()): Unit =
-    appendCommitLine(table, "._commit_ts", version, epochMillis.toString)
-
-  /** (version, epochMillis) pairs in commit order; empty when the sidecar
-    * does not exist (tables written before timestamps were recorded). */
-  def commitTimestamps(table: String): Seq[(Long, Long)] =
-    commitLines(table, "._commit_ts").map { case (v, ts) => (v, ts.toLong) }
-
-  /** Commit-kind sidecar (`._commit_kinds`, `append` or `rewrite` per
-    * version): whether the commit was a blind append or a merge-rewrite of
-    * the target — what Delta exposes per-commit in its log, and what
-    * `skipChangeCommits` filters on. */
-  def recordCommitKind(table: String, version: Long, kind: String): Unit =
-    appendCommitLine(table, "._commit_kinds", version, kind)
-
-  /** (version, kind) pairs in commit order; empty when the sidecar does not
-    * exist (logs written before kinds were recorded). */
-  def commitKinds(table: String): Seq[(Long, String)] =
-    commitLines(table, "._commit_kinds")
-
-  /** Transaction-identity sidecar (`._commit_txn`, `flowId#batchId` per
-    * version) — Delta's txnAppId/txnVersion idempotence for the change log:
-    * a streaming flow records which (flow, batch) produced each commit, and
-    * a foreachBatch REPLAY of an already-committed batch is skipped instead
-    * of logged twice. Only fully-committed commits carry a line (it is
-    * written with the other post-append sidecars), so an interrupted commit
-    * still trips the intent-marker probe, never a silent skip. */
-  def recordCommitTxn(table: String, version: Long, txn: String): Unit =
-    appendCommitLine(table, "._commit_txn", version, txn)
-
-  def committedTxns(table: String): Set[String] =
-    commitLines(table, "._commit_txn").map(_._2).toSet
-
-  /** The last committed version of a changes table (None = no sidecar and
-    * no rows) — read-only peek at [[nextCommitVersion]]'s counter. */
-  def currentCommitVersion(table: String): Option[Long] = {
-    val p = Paths.get(path(table) + "._version")
-    if (Files.exists(p)) Some(Files.readString(p).trim.toLong)
-    else readIfExists(table)
-      .map(_.agg(org.apache.spark.sql.functions.max("_commit_version")).first())
-      .filter(!_.isNullAt(0)).map(_.getLong(0))
+  /** `log`'s committed versions in order. Empty when neither the log nor
+    * its record exists. Loud when the log exists without a record, or when
+    * the recorded versions do not run 0, 1, 2, ... with no gap. */
+  def commits(log: String): Seq[TableStore.Commit] = {
+    val p = commitRecord(log)
+    if (!Files.exists(p)) {
+      if (exists(log)) TableStore.noRecord(log, "the record file is missing")
+      Nil
+    } else {
+      val text = Files.readString(p)
+      val cs = text.take(text.lastIndexOf('\n') + 1).linesIterator
+        .flatMap(TableStore.parseRecordLine(log, _).toOption).toSeq
+      cs.zipWithIndex.find { case (c, i) => c.version != i }.foreach { case (c, i) =>
+        TableStore.noRecord(log, s"version $i is not recorded, ${c.version} is")
+      }
+      cs
+    }
   }
-
-  /** Next value of the monotonic commit counter for an append-only changes
-    * table — read from the `._version` sidecar (O(1) per commit instead of
-    * a `max(version)` scan over the whole history every microbatch); tables
-    * created before the sidecar existed are migrated with one final scan.
-    * Does NOT persist the counter: call [[advanceCommitVersion]] after the
-    * commit's rows are durably appended — persisting first would let a
-    * crashed append leave a phantom latest version with no rows, and
-    * version_as_of at that version would silently return the PREVIOUS
-    * state. */
-  def nextCommitVersion(table: String, versionCol: String): Long = {
-    val p = Paths.get(path(table) + "._version")
-    if (Files.exists(p)) Files.readString(p).trim.toLong + 1
-    else readIfExists(table)
-      .map(_.agg(org.apache.spark.sql.functions.max(versionCol)).first())
-      .filter(!_.isNullAt(0)) // table exists but holds no rows
-      .map(_.getLong(0))
-      .getOrElse(-1L) + 1
-  }
-
-  /** Persist the commit counter — the commit's durability point for
-    * [[currentCommitVersion]] readers. Call only after the append
-    * succeeded (see [[nextCommitVersion]]). */
-  def advanceCommitVersion(table: String, version: Long): Unit =
-    TableStore.atomicWrite(Paths.get(path(table) + "._version"), version.toString)
 
   // ------------------------------------------------------------ internals
 
@@ -794,6 +756,60 @@ object TableStore {
     }
   }
 
+  /** One committed change-log version (see [[TableStore!.commits]]):
+    * `kind` is `append`, `delete` or `rewrite`; `replay` is the runner's
+    * replay spec; `txn` is the `flowId#batchId` that produced it, if any. */
+  final case class Commit(version: Long, epochMillis: Long, kind: String,
+      replay: String, txn: Option[String] = None)
+
+  private def noRecord(log: String, why: String): Nothing =
+    throw graft.plan.Planner.PlanError(s"'$log': log without a commit record " +
+      s"($why): full-refresh the producing write")
+
+  /** Left(v) for an intent line, Right for a commit line; loud otherwise. */
+  private def parseRecordLine(log: String, line: String): Either[Long, Commit] = {
+    object Num { def unapply(s: String): Option[Long] = s.toLongOption }
+    line.split("\t", -1) match {
+      case Array("intent", Num(v)) => Left(v)
+      case Array("commit", Num(v), Num(ms), kind, replay, txn) => Right(Commit(v, ms,
+        kind, replay, Some(txn).filter(_.nonEmpty).map(java.net.URLDecoder.decode(_, "UTF-8"))))
+      case _ => noRecord(log, s"unreadable line '$line'")
+    }
+  }
+
+  private def appendLine(p: Path, line: String): Unit = {
+    Files.createDirectories(p.getParent)
+    Files.writeString(p, line + "\n", java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND): Unit
+  }
+
+  /** The last newline-terminated line of `p` (None when it has none),
+    * read from a 16 KB tail window (the whole file only when one line is
+    * longer). Bytes after the last newline are a torn append; they are cut
+    * off so the next append starts a line of its own. Callers hold the
+    * table's writer lock. */
+  private def lastCompleteLine(p: Path): Option[String] =
+    if (!Files.exists(p)) None
+    else {
+      val f = new java.io.RandomAccessFile(p.toFile, "rw")
+      try {
+        def bytesFrom(from: Long): Array[Byte] = {
+          val b = new Array[Byte]((f.length() - from).toInt)
+          f.seek(from); f.readFully(b); b
+        }
+        var from = math.max(0L, f.length() - 16384)
+        var b = bytesFrom(from)
+        if (from > 0 && b.count(_ == '\n') < 2) { from = 0L; b = bytesFrom(0L) }
+        val end = b.lastIndexOf('\n'.toByte)
+        if (from + end + 1 < f.length()) f.setLength(from + end + 1) // torn tail
+        if (end < 0) None
+        else {
+          val start = b.lastIndexOf('\n'.toByte, end - 1) + 1
+          Some(new String(b, start, end - start, "UTF-8"))
+        }
+      } finally f.close()
+    }
+
   private[exec] def readJsonSidecar(p: Path): Map[String, String] =
     if (!Files.exists(p)) Map.empty
     else {
@@ -806,11 +822,11 @@ object TableStore {
 
   /** Write-temp-then-rename sidecar writes: a crash mid-write must never
     * leave a TORN sidecar (a truncated ._schema bricks every read with a
-    * DDL parse error; a half-written ._version misdirects version_as_of),
-    * and a concurrent read-only process must never observe partial
-    * content. Same-directory ATOMIC_MOVE is a rename. The tmp name keeps
-    * the `<table>._` prefix so [[listTables]]' sidecar exclusion and
-    * [[TableStore!.drop]]'s cleanup both already cover it. */
+    * DDL parse error; a half-written ._snapshot_version misdirects the
+    * next snapshot poll), and a concurrent read-only process must never
+    * observe partial content. Same-directory ATOMIC_MOVE is a rename. The
+    * tmp name keeps the `<table>._` prefix so [[listTables]]' sidecar
+    * exclusion and [[TableStore!.drop]]'s cleanup both already cover it. */
   private[exec] def atomicWrite(p: Path, content: String): Unit = {
     Files.createDirectories(p.getParent)
     val tmp = p.resolveSibling(p.getFileName.toString + s".tmp-${System.nanoTime()}")

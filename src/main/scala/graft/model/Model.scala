@@ -149,12 +149,14 @@ final case class TableLoad(
     versionAsOf: Option[Long] = None,
     /** Timestamp time travel (timestamp_as_of / timestampAsOf): resolved at
       * run time to the latest commit at-or-before this timestamp via the
-      * `._commit_ts` sidecar, then replayed like [[versionAsOf]]. */
+      * change log's commit record (one line per version, read through
+      * [[graft.exec.TableStore.commits]]), then replayed like
+      * [[versionAsOf]]. */
     timestampAsOf: Option[String] = None,
     /** CDF bounds on a readChangeFeed load, version or timestamp spelling
       * (mutually exclusive per bound, parse-enforced). All four resolve and
-      * validate TOGETHER at run time — timestamps via the `._commit_ts`
-      * sidecar (earliest at-or-after / latest at-or-before), then
+      * validate TOGETHER at run time — timestamps via the commit record's
+      * per-version times (earliest at-or-after / latest at-or-before), then
       * start ≤ end is checked loudly before any filter applies. */
     cdfStartingVersion: Option[Long] = None,
     cdfEndingVersion: Option[Long] = None,
@@ -163,14 +165,15 @@ final case class TableLoad(
     /** Delta's skipChangeCommits on a STREAM read: consume only blind-append
       * commits, dropping rows from merge-rewrite commits (GDPR updates,
       * CDC corrections). Emulated by streaming the `__changes` companion
-      * filtered on the `._commit_kinds` sidecar — a file stream over the
+      * filtered on the per-version kinds of its commit record (`append`,
+      * `delete` or `rewrite`) — a file stream over the
       * table directory itself would re-read rewritten files wholesale. */
     skipChangeCommits: Boolean = false,
     /** Delta's ignoreDeletes on a STREAM read: skipChangeCommits' narrower
       * sibling — tolerate commits that ONLY delete rows (retention, GDPR
       * erasure) by dropping them, but still fail loudly on update/rewrite
       * commits (which would need skipChangeCommits). Emulated on the same
-      * `._commit_kinds` sidecar: a merge commit whose batch carried nothing
+      * per-version kinds: a merge commit whose batch carried nothing
       * but apply_as_deletes rows is recorded as kind `delete`. */
     ignoreDeletes: Boolean = false,
     /** Delta's maxFilesPerTrigger rate limit on a STREAM read — passed to

@@ -168,20 +168,26 @@ object DependencyAnalyzer {
     def nodes: Set[String] = edges.keySet ++ edges.values.flatten
 
     /** Kahn generations: each generation's nodes depend only on earlier
-      * generations; a cycle raises with the residual. */
+      * generations; a cycle raises with the residual (the nodes on or
+      * behind it). In-degree counts keep it O(nodes + edges). */
     def generations: Seq[Seq[String]] = {
-      var remaining = nodes.map(n => n -> edges.getOrElse(n, Set.empty).filter(nodes)).toMap
+      val all = nodes.toSeq
+      val unmet = scala.collection.mutable.Map(
+        all.map(n => n -> edges.getOrElse(n, Set.empty).size): _*)
+      val dependents = edges.toSeq.flatMap { case (n, ds) => ds.map(_ -> n) }
+        .groupMap(_._1)(_._2)
       val out = Seq.newBuilder[Seq[String]]
-      while (remaining.nonEmpty) {
-        val ready = remaining.collect {
-          case (n, ds) if ds.forall(d => !remaining.contains(d)) => n
-        }.toSeq.sorted
-        if (ready.isEmpty)
-          throw Planner.PlanError(graft.ErrorCodes.DEP_002(
-            s"flowgroup dependency cycle: ${remaining.keys.toSeq.sorted.mkString(", ")}"))
+      var ready = all.filter(unmet(_) == 0).sorted
+      while (ready.nonEmpty) {
         out += ready
-        remaining = remaining -- ready
+        // a dependent is ready once its last dependency has been emitted
+        ready = ready.flatMap(dependents.getOrElse(_, Nil))
+          .filter { n => unmet(n) -= 1; unmet(n) == 0 }.sorted
       }
+      val residual = all.filter(unmet(_) > 0).sorted
+      if (residual.nonEmpty)
+        throw Planner.PlanError(graft.ErrorCodes.DEP_002(
+          s"flowgroup dependency cycle: ${residual.mkString(", ")}"))
       out.result()
     }
   }

@@ -2096,21 +2096,23 @@ object Extras {
     // Spark-session boot proceeds concurrently with generation 1's
     // in-process run below, so only the generation-2 crawl itself remains
     // on the gate's critical path (guide §2.6 — overlap independent work;
-    // the child touches no shared state until the run command arrives)
-    val pendingChild = graft.tools.CrawlResumeChild.spawnEager()
-    // generation 1: full run in-process
-    copyFixture(s"$fixture/a", landing, "a-")
-    runInProcess()
-    // generation 2: a child JVM that hard-halts right after the dedup MV
-    // commits — ingest + dedup state is on disk, index/mix/final never ran
-    copyFixture(s"$fixture/b", landing, "b-")
-    val tChild = System.nanoTime()
-    val (code, out) = pendingChild.run(
-      s"$wh/wh", s"$wh/cp", yamlDir, "c15_corpus")
-    // the child's wall clock is JVM boot + session lifecycle + one crawl
-    // generation — gate scaffolding, not this engine's plan cost; record
-    // it so the bench can report plan_cost beside total
-    graft.tools.GateLifecycle.add((System.nanoTime() - tChild) / 1e9)
+    // the child touches no shared state until the run command arrives;
+    // withEagerChild destroys it if generation 1 throws)
+    val (code, out) = graft.tools.CrawlResumeChild.withEagerChild { pendingChild =>
+      // generation 1: full run in-process
+      copyFixture(s"$fixture/a", landing, "a-")
+      runInProcess()
+      // generation 2: a child JVM that hard-halts right after the dedup MV
+      // commits — ingest + dedup state is on disk, index/mix/final never ran
+      copyFixture(s"$fixture/b", landing, "b-")
+      val tChild = System.nanoTime()
+      val res = pendingChild.run(s"$wh/wh", s"$wh/cp", yamlDir, "c15_corpus")
+      // the child's wall clock is JVM boot + session lifecycle + one crawl
+      // generation — gate scaffolding, not this engine's plan cost; record
+      // it so the bench can report plan_cost beside total
+      graft.tools.GateLifecycle.add((System.nanoTime() - tChild) / 1e9)
+      res
+    }
     require(code == 137 && out.contains("HALTING after c15_corpus"),
       s"c15: child JVM was supposed to hard-halt after the dedup commit " +
         s"(exit 137), got exit $code; output tail: ${out.takeRight(800)}")

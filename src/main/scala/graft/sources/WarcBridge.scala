@@ -124,28 +124,6 @@ object WarcBridge {
 
   // ------------------------------------------------------------- gunzip
 
-  /** Inflate every gzip member of `bytes` into one array — spec/fixture
-    * convenience over [[gunzipMembers]]; production decode streams the
-    * members instead (a full-size response shard decompresses past the
-    * JVM array limit this concatenation is bounded by). */
-  private[sources] def gunzipStrict(bytes: Array[Byte], path: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream(math.min(bytes.length.toLong * 4, Int.MaxValue / 2).toInt)
-    var total = 0L
-    gunzipMembers(bytes, path).foreach { m =>
-      total += m.length
-      if (total > Int.MaxValue - 64) throw ConfigError(s"warc: '$path': " +
-        "decompressed size exceeds the JVM array limit (~2 GB) — use the " +
-        "streaming decode path (member iteration) for full-size shards")
-      out.write(m)
-    }
-    out.toByteArray
-  }
-
-  /** Array entry point for specs/fixtures — delegates to the ONE
-    * streaming implementation below so the two can never drift. */
-  private[sources] def gunzipMembers(bytes: Array[Byte], path: String): Iterator[Array[Byte]] =
-    gunzipMembersStream(new java.io.ByteArrayInputStream(bytes), path)
-
   /** Inflate gzip members ONE AT A TIME from a stream, loudly: corrupt
     * member headers, CRC/ISIZE mismatches, truncated deflate streams, and
     * trailing non-gzip garbage all throw with `path` named — never a

@@ -44,6 +44,15 @@ object ChildJvm {
       drainer.join(10000)
       (code, out.synchronized(new String(out.toByteArray, "UTF-8")))
     }
+
+    /** Kill the child and wait (up to 10 s) for it to be gone; a no-op
+      * once it has exited. */
+    def destroy(): Unit = {
+      proc.destroyForcibly()
+      proc.waitFor(10, java.util.concurrent.TimeUnit.SECONDS): Unit
+    }
+
+    def isAlive: Boolean = proc.isAlive
   }
 
   /** Start the child NOW and return without waiting: JVM + session boot

@@ -112,10 +112,10 @@ object CrawlResumeChild {
       haltSpec: String): (Int, String) =
     ChildJvm.spawn("graft.tools.CrawlResumeChild", Seq(wh, cp, yamlDir, haltSpec))
 
-  /** Eager variant: spawn the child in `--server` mode NOW (JVM + Spark
-    * session boot proceed in the background) and hand back a handle whose
-    * [[Pending.run]] sends the four run args and waits for the halt/exit.
-    * The c15 gate spawns this before its in-process generation-1 run, so
+  /** Eager variant: a child spawned in `--server` mode by
+    * [[withEagerChild]] (JVM + Spark session boot proceed in the
+    * background); [[Pending.run]] sends the four run args and waits for the
+    * halt/exit. The c15 gate spawns it before its in-process generation-1 run, so
     * the multi-second child boot overlaps real engine work instead of
     * sitting on the gate's critical path. */
   final class Pending private[CrawlResumeChild] (child: ChildJvm.AsyncChild) {
@@ -124,9 +124,20 @@ object CrawlResumeChild {
       child.send(Seq(wh, cp, yamlDir, haltSpec).mkString("\u001f"))
       child.await()
     }
+
+    /** Abandon the child: kill it and wait for it to exit (a no-op once
+      * [[run]] has returned — the child has exited by then). */
+    def destroy(): Unit = child.destroy()
+
+    def isAlive: Boolean = child.isAlive
   }
 
-  def spawnEager(): Pending =
-    new Pending(ChildJvm.spawnAsync("graft.tools.CrawlResumeChild",
+  /** Run `body` with an eager child that is destroyed on the way out, so
+    * a throw before [[Pending.run]] (the c15 gate's generation 1 failing)
+    * leaves no orphaned `--server` JVM behind. */
+  def withEagerChild[T](body: Pending => T): T = {
+    val child = new Pending(ChildJvm.spawnAsync("graft.tools.CrawlResumeChild",
       Seq("--server")))
+    try body(child) finally child.destroy()
+  }
 }

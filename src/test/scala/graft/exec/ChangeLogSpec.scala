@@ -8,6 +8,9 @@ import graft.config.YamlConfig
 class ChangeLogSpec extends SparkSuite {
   import spark.implicits._
 
+  private def kindsOf(store: TableStore, log: String): Seq[(Long, String)] =
+    store.commits(log).map(c => (c.version, c.kind))
+
   test("change_log maintains a CDF-style __changes companion table") {
     val dir = Files.createTempDirectory("graft-cdf").toString
     val store = new TableStore(spark, s"$dir/wh")
@@ -43,6 +46,17 @@ class ChangeLogSpec extends SparkSuite {
     assert(changes.select("_commit_version").distinct().as[Long].collect().toSet == Set(0L, 1L))
     assert(changes.filter("_change_type = 'delete'")
       .select("id").as[Int].collect().toSeq == Seq(2))
+    // one commit record per log: none of the per-field sidecars it replaced
+    val legacy = Seq("._version", "._commit_ts", "._commit_kinds",
+      "._commit_txn", "._replay", "._commit_intent")
+    val whFiles = {
+      val w = Files.walk(java.nio.file.Paths.get(s"$dir/wh"))
+      try w.toArray.map(_.toString).toSeq finally w.close()
+    }
+    assert(!whFiles.exists(f => legacy.exists(f.endsWith)), whFiles.mkString("\n"))
+    assert(whFiles.contains(store.path("cdf_dim__changes") + "._commits"))
+    assert(store.commits("cdf_dim__changes").map(c => (c.version, c.kind)) ==
+      Seq((0L, "rewrite"), (1L, "rewrite")))
 
     // bounded CDF read back through the YAML surface: a delta load with
     // readChangeFeed + version window reads exactly commit 1's rows
@@ -198,11 +212,12 @@ class ChangeLogSpec extends SparkSuite {
     val e5 = intercept[graft.plan.Planner.PlanError](asOf("app_t", 0))
     assert(e5.getMessage.contains("DIFFERENT merge options"))
 
-    // a pre-replay-sidecar log (older engine) gets the actionable message
+    // a log without its commit record (no replay metadata) gets the
+    // actionable message
     java.nio.file.Files.delete(java.nio.file.Paths.get(
-      store.path("scd2_t__changes") + "._replay"))
+      store.path("scd2_t__changes") + "._commits"))
     val e6 = intercept[graft.plan.Planner.PlanError](asOf("scd2_t", 0))
-    assert(e6.getMessage.contains("no replay sidecar"))
+    assert(e6.getMessage.contains("without a commit record"), e6.getMessage)
   }
 
   test("commit integrity: counter advances only after append; half-commits are loud; separator column names rejected") {
@@ -223,19 +238,22 @@ class ChangeLogSpec extends SparkSuite {
          |    write_target: {type: streaming_table, table: $table, change_log: true}
          |$cdc""".stripMargin
 
-    // nextCommitVersion is a pure peek — repeated calls do not advance
     Seq((1, "a")).toDF("id", "v").createOrReplaceTempView("ci_b1")
     runner.run(YamlConfig.parseFlowGroup(appendYaml("ci_b1", "ci_t")))
-    assert(store.nextCommitVersion("ci_t__changes", "_commit_version") == 1L)
-    assert(store.nextCommitVersion("ci_t__changes", "_commit_version") == 1L)
-    assert(store.currentCommitVersion("ci_t__changes").contains(0L))
+    assert(store.commits("ci_t__changes").map(_.version) == Seq(0L))
 
-    // a commit interrupted between append and counter-advance (simulated by
-    // rolling the counter back) is detected loudly, not replayed wrong
+    // a commit interrupted between append and commit line (simulated by
+    // dropping version 1's lines from the record) is detected loudly, not
+    // replayed wrong
     Seq((2, "b")).toDF("id", "v").createOrReplaceTempView("ci_b2")
     runner.run(YamlConfig.parseFlowGroup(appendYaml("ci_b2", "ci_t")))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(store.path("ci_t__changes") + "._version"), "0")
+    val rec = java.nio.file.Paths.get(store.path("ci_t__changes") + "._commits")
+    val recLines = Files.readString(rec).linesIterator.toSeq
+    val commit1 = recLines.find(_.startsWith("commit\t1\t")).get
+    Files.writeString(rec, recLines.filter(l => l == "intent\t0" ||
+      l.startsWith("commit\t0\t")).map(_ + "\n").mkString)
+    def appendRecord(line: String): Unit =
+      Files.writeString(rec, line + "\n", java.nio.file.StandardOpenOption.APPEND): Unit
     val e = intercept[graft.plan.Planner.PlanError](runner.execute(
       YamlConfig.parseFlowGroup(
         s"""pipeline: p2
@@ -248,13 +266,12 @@ class ChangeLogSpec extends SparkSuite {
            |""".stripMargin).actions.head))
     assert(e.getMessage.contains("interrupted"))
 
-    // the NEXT write to the table must also refuse: nextCommitVersion is a
-    // pure peek, so a retry after the crash would re-append the batch at
-    // the SAME version — duplicate rows that then pass every read-side
-    // check (the inverse crash window of the counter-first ordering). The
-    // real crash leaves the commit-intent marker set (it clears only after
-    // a completed commit), which is what arms the write-path probe.
-    store.setMeta("ci_t__changes", "commit_intent", "1")
+    // the NEXT write to the table must also refuse: beginCommit hands out
+    // the last commit + 1, so a retry after the crash would re-append the
+    // batch at the SAME version — duplicate rows that then pass every
+    // read-side check. The real crash leaves the record ending in the
+    // commit's intent line, which is what arms the write-path probe.
+    appendRecord("intent\t1")
     Seq((3, "c")).toDF("id", "v").createOrReplaceTempView("ci_b3")
     val eW = intercept[graft.plan.Planner.PlanError](runner.run(
       YamlConfig.parseFlowGroup(appendYaml("ci_b3", "ci_t"))))
@@ -276,23 +293,39 @@ class ChangeLogSpec extends SparkSuite {
            |""".stripMargin).actions.head))
     assert(eCdf.getMessage.contains("interrupted"), eCdf.getMessage)
 
-    // restoring the counter heals every path: the armed probe finds the
-    // log clean, the write proceeds, and the completed commit clears the
-    // intent marker
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(store.path("ci_t__changes") + "._version"), "1")
+    // restoring version 1's commit line heals every path; a later intent
+    // with no rows (a crash before the append) arms the probe, which finds
+    // the log clean, and the write proceeds and records its commit
+    appendRecord(commit1)
+    appendRecord("intent\t2")
     runner.run(YamlConfig.parseFlowGroup(appendYaml("ci_b3", "ci_t")))
-    assert(store.currentCommitVersion("ci_t__changes").contains(2L))
-    assert(store.getMeta("ci_t__changes", "commit_intent").isEmpty)
+    assert(store.commits("ci_t__changes").map(_.version) == Seq(0L, 1L, 2L))
+    assert(Files.readString(rec).linesIterator.toSeq.last.startsWith("commit\t2\t"))
+    // beginCommit reads only the record's last line: a second begin with
+    // no commit in between reports the first as interrupted; a torn tail
+    // (a crash mid-append) is cut off and ignored by the listing
+    assert(store.beginCommit("ci_t__changes") == ((3L, false)))
+    Files.writeString(rec, "commit\t3\t12", java.nio.file.StandardOpenOption.APPEND)
+    assert(store.commits("ci_t__changes").map(_.version) == Seq(0L, 1L, 2L))
+    assert(store.beginCommit("ci_t__changes") == ((3L, true)))
+    assert(Files.readString(rec).endsWith("intent\t3\nintent\t3\n"))
 
-    // CDC column names carrying replay-sidecar separators are rejected at
-    // write time — they would round-trip into different merge options
+    // CDC column names carrying replay-spec separators are rejected at
+    // write time — they would round-trip into different merge options, or
+    // (a tab) split the commit record's line
     Seq((1, 1L, "a")).toDF("k,x", "seq", "v").createOrReplaceTempView("ci_sep")
     val eSep = intercept[graft.plan.Planner.PlanError](runner.run(
       YamlConfig.parseFlowGroup(appendYaml("ci_sep", "sep_t",
         """    cdc_config: {keys: ["k,x"], sequence_by: seq, scd_type: 1}
           |""".stripMargin))))
     assert(eSep.getMessage.contains("separator"))
+    Seq((1, 1L, "a")).toDF("k\tx", "seq", "v").createOrReplaceTempView("ci_tab")
+    val eTab = intercept[graft.plan.Planner.PlanError](runner.run(
+      YamlConfig.parseFlowGroup(appendYaml("ci_tab", "tab_t",
+        """    cdc_config: {keys: ["k\tx"], sequence_by: seq, scd_type: 1}
+          |""".stripMargin))))
+    assert(eTab.getMessage.contains("separator"))
+    assert(!store.exists("tab_t__changes"))
   }
 
   test("timestamp time travel and timestamp CDF bounds resolve via the commit-ts sidecar") {
@@ -316,7 +349,7 @@ class ChangeLogSpec extends SparkSuite {
     Seq((2, "b")).toDF("id", "v").createOrReplaceTempView("ts_b2")
     runner.run(YamlConfig.parseFlowGroup(yaml("ts_b1")))
     runner.run(YamlConfig.parseFlowGroup(yaml("ts_b2")))
-    val commits = store.commitTimestamps("ts_t__changes")
+    val commits = store.commits("ts_t__changes").map(c => (c.version, c.epochMillis))
     assert(commits.map(_._1) == Seq(0L, 1L) && commits.forall(_._2 > 0))
 
     def loadWith(srcExtra: String, tgt: String) = {
@@ -366,17 +399,18 @@ class ChangeLogSpec extends SparkSuite {
       loadWith("timestamp_as_of: \"20990101\"", "tt_cmp"))
     assert(eCompact.getMessage.contains("ambiguous numeric"))
 
-    // PARTIAL timestamp coverage (pre-upgrade commits unrecorded): loud —
-    // simulate by dropping version 0's line from the sidecar
-    val tsPath = java.nio.file.Paths.get(store.path("ts_t__changes") + "._commit_ts")
-    val lines = java.nio.file.Files.readString(tsPath).linesIterator.toSeq
-    java.nio.file.Files.writeString(tsPath, lines.drop(1).mkString("", "\n", "\n"))
+    // PARTIAL timestamp coverage (a commit missing from the record): loud —
+    // simulate by dropping version 0's commit line from the record
+    val recPath = java.nio.file.Paths.get(store.path("ts_t__changes") + "._commits")
+    val lines = java.nio.file.Files.readString(recPath).linesIterator.toSeq
+    java.nio.file.Files.writeString(recPath,
+      lines.filterNot(_.startsWith("commit\t0\t")).mkString("", "\n", "\n"))
     val ePartial = intercept[graft.plan.Planner.PlanError](
       loadWith(s"timestamp_as_of: ${commits(1)._2}", "tt_par"))
-    assert(ePartial.getMessage.contains("PARTIAL"))
-    // version bounds still work on the same log (they never touch the sidecar)
-    assert(loadWith("version_as_of: 1", "tt_ver")
-      .select("id").as[Int].collect().sorted.toSeq == Seq(1, 2))
+    assert(ePartial.getMessage.contains("without a commit record"), ePartial.getMessage)
+    // version bounds read the same record, so they refuse the gap too
+    val eVer = intercept[graft.plan.Planner.PlanError](loadWith("version_as_of: 1", "tt_ver"))
+    assert(eVer.getMessage.contains("without a commit record"), eVer.getMessage)
   }
 
   test("skipChangeCommits streams only blind-append commits; guards are loud") {
@@ -405,7 +439,7 @@ class ChangeLogSpec extends SparkSuite {
     runner.run(YamlConfig.parseFlowGroup(writeYaml("sk_b3", "sk_t",
       """    cdc_config: {keys: [k], sequence_by: seq, scd_type: 1}
         |""".stripMargin)))
-    assert(store.commitKinds("sk_t__changes") ==
+    assert(kindsOf(store, "sk_t__changes") ==
       Seq((0L, "append"), (1L, "append"), (2L, "rewrite")))
     // the skip stream serves the two append batches — NOT the merged table
     // state (k=1 now carries "A" there) and NOT the merge's change rows
@@ -478,9 +512,9 @@ class ChangeLogSpec extends SparkSuite {
         |    write_target: {type: streaming_table, table: out}
         |""".stripMargin).actions.head)
     assert(runner.view("v_named").count() == 1)
-    // a log predating kind recording cannot be skip-filtered — loud
+    // a log without its commit record (no kinds) cannot be skip-filtered
     java.nio.file.Files.delete(java.nio.file.Paths.get(
-      store.path("sk_t__changes") + "._commit_kinds"))
+      store.path("sk_t__changes") + "._commits"))
     val ePartial = intercept[graft.plan.Planner.PlanError](runner.execute(
       YamlConfig.parseFlowGroup(
         """pipeline: p
@@ -496,7 +530,7 @@ class ChangeLogSpec extends SparkSuite {
           |    source: v
           |    write_target: {type: streaming_table, table: out}
           |""".stripMargin).actions.head))
-    assert(ePartial.getMessage.contains("commit-kind"), ePartial.getMessage)
+    assert(ePartial.getMessage.contains("without a commit record"), ePartial.getMessage)
   }
 
   test("ignoreDeletes excuses delete-only commits; rewrites stay loud") {
@@ -533,7 +567,7 @@ class ChangeLogSpec extends SparkSuite {
     runner.run(YamlConfig.parseFlowGroup(writeYaml("ig_b3")))
     // the delete-only merge is its own commit kind — the signal that
     // separates ignoreDeletes (excused) from skipChangeCommits (any rewrite)
-    assert(store.commitKinds("ig_t__changes") ==
+    assert(kindsOf(store, "ig_t__changes") ==
       Seq((0L, "append"), (1L, "delete"), (2L, "append")))
     // the ignoreDeletes stream serves the append commits' rows and drops the
     // delete commit — with maxFilesPerTrigger rate-limiting along the way
@@ -562,7 +596,7 @@ class ChangeLogSpec extends SparkSuite {
     Seq((2, 40L, "B", "U")).toDF("k", "seq", "v", "op")
       .createOrReplaceTempView("ig_b4")
     runner.run(YamlConfig.parseFlowGroup(writeYaml("ig_b4", delCdc)))
-    assert(store.commitKinds("ig_t__changes").last == (3L, "rewrite"))
+    assert(kindsOf(store, "ig_t__changes").last == (3L, "rewrite"))
     val eRewrite = intercept[graft.plan.Planner.PlanError](runner.execute(
       YamlConfig.parseFlowGroup(
         """pipeline: p3
@@ -660,7 +694,7 @@ class ChangeLogSpec extends SparkSuite {
       .createOrReplaceTempView("s2d_b2")
     runner.run(YamlConfig.parseFlowGroup(writeYaml("s2d_b1", scd2Cdc)))
     runner.run(YamlConfig.parseFlowGroup(writeYaml("s2d_b2", scd2Cdc)))
-    assert(store.commitKinds("s2d_t__changes") ==
+    assert(kindsOf(store, "s2d_t__changes") ==
       Seq((0L, "rewrite"), (1L, "rewrite")))
     val e = intercept[graft.plan.Planner.PlanError](runner.execute(
       YamlConfig.parseFlowGroup(

@@ -72,8 +72,14 @@ class LeafIndexStressSpec extends SparkSuite {
         } else register(r2, "dev.events")
       }
       done.await()
-      assert(errors.isEmpty,
-        s"round $round: worker threw: ${Option(errors.peek()).map(_.toString)}")
+      // the whole cause chain with its frames: `register` goes through
+      // reflection, so the first line is only InvocationTargetException
+      assert(errors.isEmpty, s"round $round: worker threw: " +
+        Option(errors.peek()).map { t =>
+          val w = new java.io.StringWriter
+          t.printStackTrace(new java.io.PrintWriter(w))
+          w.toString
+        }.getOrElse(""))
     }
 
     // ---- quiescence: runner-convention final pass, then the invariants
